@@ -3,11 +3,13 @@
 Replaces the reference's Postgres schema ``music_data`` with columnar Parquet
 tables. Physical design (SURVEY.md §4 Q7):
 
-- ``ranking`` is **partitioned by ranking_date**: the report query filters to
-  one date (``render_templates.py:148-152``) and the retention purge drops
-  whole trailing date ranges — both become partition pruning instead of full
-  scans. At 100 TB this is the difference between touching one partition and
-  scanning years of history.
+- ``ranking`` is **partitioned by ranking_date**: a daily batch rewrites
+  only its own date partitions and the retention purge drops whole trailing
+  date ranges as partition metadata (``stage_partition_delta``), not a
+  table rewrite. At 100 TB this is the difference between touching one
+  partition and rewriting years of history. (The report's one-date filter
+  sits above a window, so it still scans every partition — see
+  ``plans/report.py``.)
 - Dimensions (``artist``, ``song``, ``artist_song_map``) stay broadcast-sized
   (bounded by distinct charted songs) and are written unpartitioned.
 
@@ -22,6 +24,7 @@ one back-version for in-flight readers.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import json
 import os
 import shutil
@@ -506,6 +509,11 @@ def _partition_dir_name(pcol: str, v) -> str:
     return f"{pcol}={_escape_path_name(_fmt_partition_value(v))}"
 
 
+# Inverse of _fmt_partition_value for the types of the PARTITIONED
+# columns' declared schemas.
+_PARTITION_VALUE_PARSERS = {"date": datetime.date.fromisoformat}
+
+
 def _infer_partition_type(vals: list[str]):
     """Replicate Spark's partition-column type inference
     (``PartitioningUtils.inferPartitionColumnValue`` + type widening)
@@ -546,11 +554,9 @@ def _infer_partition_type(vals: list[str]):
             return LongType()
         return None
     if all(re.fullmatch(r"\d{4}-\d{2}-\d{2}", v) for v in vals):
-        import datetime as _dt
-
         try:
             for v in vals:
-                _dt.date.fromisoformat(v)
+                datetime.date.fromisoformat(v)
         except ValueError:
             return None  # non-calendar date: let Spark decide
         return DateType()
@@ -619,6 +625,17 @@ class Catalog:
         # on every later read of the same path — skipping the
         # footer-inference Spark job each inference-schema read pays.
         self._schema_cache: dict[str, object] = {}
+        # The root is a local POSIX directory the catalog already lists
+        # itself on every commit (hardlink reuse, sidecar schemas). Above
+        # Spark's default threshold of 32 directories, a snapshot read
+        # lists its partitions with a distributed job of one task per
+        # directory — a 365-task job per fact-table read for what a
+        # driver-side listdir does in milliseconds. Always list on the
+        # driver.
+        spark.conf.set(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
         os.makedirs(root, exist_ok=True)
         self._recover()
         self._sweep_trash()
@@ -844,6 +861,26 @@ class Catalog:
             [f for f in base.fields if f.name != pcol]
             + [StructField(pcol, ptype, True)]
         )
+
+    def partition_values(self, table: str) -> list:
+        """The current snapshot's partition values, parsed on the driver
+        from its ``{pcol}=`` directory names and typed by the declared
+        partition column — table metadata, no Spark job. ``[]`` when the
+        table does not exist yet."""
+        if table not in PARTITIONED:
+            raise ValueError(f"{table} is not partitioned")
+        p = self.path(table)
+        if p is None:
+            return []
+        (pcol,) = PARTITIONED[table]
+        dtype = schemas.TABLE_SCHEMAS[table][pcol].dataType
+        parse = _PARTITION_VALUE_PARSERS[dtype.typeName()]
+        prefix = f"{pcol}="
+        return [
+            parse(_unescape_path_name(e[len(prefix) :]))
+            for e in os.listdir(p)
+            if e.startswith(prefix) and os.path.isdir(os.path.join(p, e))
+        ]
 
     def read_at(self, table: str, version: int) -> DataFrame:
         """Time-travel read of a retained snapshot version (Iceberg/Delta

@@ -27,10 +27,3 @@ def embed_spotify_url(col: Column | str) -> Column:
     return F.concat(
         F.regexp_replace(c, r"/track/", "/embed/track/"), F.lit("?theme=0")
     )
-
-
-def embed_apple_music_url(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(
-        c, r"^https://music\.apple\.com/", "https://embed.music.apple.com/"
-    )

@@ -29,6 +29,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def retention_cutoff(d: dt.date) -> dt.date:
+    """T1's purge bound for a batch dated ``d``: ranking rows dated on or
+    before it are purged. ``d - INTERVAL '1 year'`` with Spark's
+    ``add_months(d, -12)`` semantics — same month of the previous year,
+    the day clamped to that month's length (2024-02-29 → 2023-02-28)."""
+    try:
+        return d.replace(year=d.year - 1)
+    except ValueError:  # Feb 29 in a leap year
+        return d.replace(year=d.year - 1, day=28)
+
+
 @dataclass
 class Tables:
     artist: DataFrame
@@ -87,10 +98,9 @@ def maintain(
     )
     ranking = tables.ranking
     if new_max_date is not None:
-        # T1: ranking_date <= NEW.ranking_date - INTERVAL '1 year' is purged
-        # (keep-side rewrite; interval-year arithmetic = add_months -12).
-        cutoff = F.add_months(F.lit(new_max_date), -12)
-        ranking = ranking.filter(F.col("ranking_date") > cutoff)
+        # T1, keep-side: rows dated <= the retention cutoff are purged.
+        cutoff = retention_cutoff(new_max_date)
+        ranking = ranking.filter(F.col("ranking_date") > F.lit(cutoff))
 
     # T2: songs must still be referenced by some ranking row. The build
     # side (distinct charted isrcs) is bounded by the domain — 10 ranks ×

@@ -47,14 +47,6 @@ def check_cardinality(df: DataFrame, expected: int = 10) -> DataFrame:
     return df
 
 
-def assert_unique(df: DataFrame, key: list[str]) -> None:
-    """UNIQUE-constraint audit: used by tests and the bootstrap to prove the
-    upsert family preserved key uniqueness."""
-    dupes = df.groupBy(*key).count().filter(F.col("count") > 1).limit(1).collect()
-    if dupes:
-        raise DataQualityError(f"duplicate key {key}: {dupes[0]}")
-
-
 def table_checksum(df: DataFrame, canonical_cols: list[Column]) -> DataFrame:
     """Order-insensitive table content fingerprint: (row_count, sum of
     per-row 60-bit md5 prefixes) — the cross-engine migration audit

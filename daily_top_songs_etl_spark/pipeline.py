@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .pins import release_new_pins, snapshot_pins
-from .operators.maintain import Tables, maintain
+from .operators.maintain import Tables, maintain, retention_cutoff
 from .operators.topk import assign_positional_ranks
 from .operators.upsert import merge_song, upsert
 from .operators.validate import validate_ranking
@@ -178,7 +178,7 @@ def run_daily_batch(
         # the serialization the reference gets from Postgres row locks).
         with catalog.writer_lock():
             return _commit_batch(
-                catalog, tables, deltas, ranking_t, ranking_ins, new_max_date
+                catalog, tables, deltas, ranking_ins, new_max_date
             )
     finally:
         # Release the dimension pins (their data is committed to parquet;
@@ -189,7 +189,7 @@ def run_daily_batch(
         release_new_pins(sc, pre_pin_ids, "run_daily_batch")
 
 
-def _commit_batch(catalog, tables, deltas, ranking_t, ranking_ins, new_max_date):
+def _commit_batch(catalog, tables, deltas, ranking_ins, new_max_date):
     """The snapshot-consistent publication tail of :func:`run_daily_batch`
     (runs under the caller's held writer lock — the nested catalog calls
     below re-enter it)."""
@@ -201,24 +201,15 @@ def _commit_batch(catalog, tables, deltas, ranking_t, ranking_ins, new_max_date)
     if not catalog.exists("ranking"):
         catalog.commit_tables({**dims, "ranking": tables.ranking})
         return deltas
-    spark = ranking_ins.sparkSession
     inserted_dates = [
         r[0]
         for r in ranking_ins.select("ranking_date").distinct().collect()
     ]  # bounded: one value per touched day
     if new_max_date is not None:
-        cutoff = (
-            spark.createDataFrame([(new_max_date,)], "d date")
-            .select(F.add_months("d", -12).alias("c"))
-            .first()[0]
-        )
-        purged = [
-            r[0]
-            for r in ranking_t.select("ranking_date")
-            .distinct()
-            .filter(F.col("ranking_date") <= F.lit(cutoff))
-            .collect()
-        ]  # partition metadata, bounded by retained dates
+        # T1's purge is partition metadata: the catalog lists the
+        # snapshot's date directories on the driver, no Spark job
+        cutoff = retention_cutoff(new_max_date)
+        purged = [d for d in catalog.partition_values("ranking") if d <= cutoff]
         touched = [d for d in inserted_dates if d > cutoff]
     else:
         purged, touched = [], inserted_dates

@@ -2,15 +2,16 @@
 
 Query side (``render_templates.py:139-152``): select
 (song, spotify_url, apple_music_url, delta) from the flagship delta view
-filtered to one date — the filter prunes straight to one ranking_date
-partition. Presentation side (``:156-195`` + ``templates/readme.md.jinja2``):
-markdown escaping (X7), embed-URL derivation (P9), delta display (X11:
-NULL→"—"-for-new… actually NULL→"new"? No: NULL renders as "—"? see below),
+filtered to one date. The filter cannot prune partitions: it sits above
+the delta view's lag window, which is partitioned by (source, isrc), so
+the report scans the whole fact table and filters after the window.
+Presentation side (``:156-195`` + ``templates/readme.md.jinja2``):
+markdown escaping (X7), embed-URL derivation (P9), delta display (X11)
 and per-platform tables.
 
-Display rules from ``templates/readme.md.jinja2:13-23,31-41``:
-delta None → "new" (gap/first entry), > 0 → "+n", < 0 → "n" (sign already
-present), 0 → "—" (held position).
+Delta display rules (X11, ``templates/readme.md.jinja2:13-23,31-41``):
+NULL → "new" (gap or first entry), > 0 → "+n", < 0 → "n" (the sign is
+already present), 0 → "—" (held position).
 
 The per-row Python transforms become DataFrame expressions; only the final
 ≤20-row collect and string template run on the driver (K6 is a report sink

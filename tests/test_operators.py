@@ -2149,3 +2149,127 @@ def test_partitioned_sidecar_schema_matches_inference(spark, tmp_path):
     # and cat.read still serves every declined table (via inference)
     for t in ("floats", "nulls", "mixed"):
         assert cat.read(t).count() == 2
+
+
+def test_catalog_read_lists_partitions_on_the_driver(spark, tmp_path):
+    """A fact snapshot with more date partitions than Spark's default
+    parallel-discovery threshold (32) opens with a driver-side listing:
+    the read launches no Spark job, and the catalog serves the same
+    partition values from its directory names."""
+    import time
+    import uuid
+
+    from daily_top_songs_etl_spark.catalog import Catalog
+
+    days = [dt.date(2025, 1, 1) + dt.timedelta(days=i) for i in range(48)]
+    rows = [("ZZPLD0000001", d, 1, "Spotify") for d in days]
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.write(spark.createDataFrame(rows, schemas.RANKING), "ranking")
+
+    sc = spark.sparkContext
+    group = f"catalog-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog.read")
+    try:
+        df = cat.read("ranking")
+        # marker job: status events arrive in order, so once the marker
+        # is visible any listing job the read launched is visible too
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(group) and time.time() < deadline:
+        time.sleep(0.05)
+    assert len(tracker.getJobIdsForGroup(group)) == 1  # the marker alone
+
+    assert sorted(cat.partition_values("ranking")) == days
+    assert df.count() == len(days)
+
+
+def test_retention_cutoff_matches_spark_add_months(spark):
+    from daily_top_songs_etl_spark.operators.maintain import retention_cutoff
+
+    days = [
+        dt.date(2024, 2, 29),
+        dt.date(2025, 3, 31),
+        dt.date(2025, 1, 1),
+        dt.date(2024, 12, 31),
+        dt.date(2025, 6, 15),
+    ]
+    got = spark.createDataFrame([(d,) for d in days], "d date").select(
+        F.add_months("d", -12).alias("c")
+    )
+    assert [retention_cutoff(d) for d in days] == [r.c for r in got.collect()]
+
+
+def test_daily_batch_purge_on_clamped_cutoff(spark, tmp_path):
+    """A batch dated 2024-02-29 has a clamped cutoff (2023-02-28): the
+    partitions the commit drops are exactly the dates Spark's
+    ``add_months(d, -12)`` filter drops — 2023-03-01 survives, which a
+    365-day cutoff would purge."""
+    from daily_top_songs_etl_spark.catalog import Catalog
+    from daily_top_songs_etl_spark.pipeline import run_daily_batch
+    from daily_top_songs_etl_spark.streaming.daily_stream import LANDING_SCHEMA
+
+    old_days = [
+        dt.date(2023, 2, 27),
+        dt.date(2023, 2, 28),
+        dt.date(2023, 3, 1),
+        dt.date(2023, 9, 15),
+        dt.date(2024, 2, 28),
+    ]
+    isrcs = [f"ZZCUT{i:07d}" for i in range(len(old_days) + 1)]
+    artist_id = "ARTCUT" + "0" * 16
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.commit_tables(
+        {
+            "artist": spark.createDataFrame(
+                [(artist_id, "Artist")], schemas.ARTIST
+            ),
+            "song": spark.createDataFrame(
+                [
+                    (i, f"Song {i}", 180000, False, f"https://s/{i}", None)
+                    for i in isrcs[:-1]
+                ],
+                schemas.SONG,
+            ),
+            "artist_song_map": spark.createDataFrame(
+                [(artist_id, i) for i in isrcs[:-1]], schemas.ARTIST_SONG_MAP
+            ),
+            "ranking": spark.createDataFrame(
+                [(i, d, 1, "Spotify") for i, d in zip(isrcs, old_days)],
+                schemas.RANKING,
+            ),
+        }
+    )
+    new_day = dt.date(2024, 2, 29)
+    t1_drops = {
+        r.ranking_date
+        for r in cat.read("ranking")
+        .filter(F.col("ranking_date") <= F.add_months(F.lit(new_day), -12))
+        .collect()
+    }
+    before = set(cat.partition_values("ranking"))
+    batch = spark.createDataFrame(
+        [
+            (
+                0,
+                "Spotify",
+                isrcs[-1],
+                [{"artist_id": artist_id, "artist_name": "Artist"}],
+                "New song",
+                180000,
+                False,
+                "https://s/new",
+                None,
+                new_day,
+            )
+        ],
+        LANDING_SCHEMA,
+    )
+    run_daily_batch(cat, batch)
+    after = set(cat.partition_values("ranking"))
+    assert after - before == {new_day}
+    assert before - after == t1_drops
+    assert t1_drops == {dt.date(2023, 2, 27), dt.date(2023, 2, 28)}
+    assert {r.ranking_date for r in cat.read("ranking").collect()} == after
